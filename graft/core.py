@@ -21,17 +21,21 @@ from pyspark.sql import functions as F
 
 DEC = "DECIMAL(18,6)"
 
-# Session-scoped catalog of opened tables (r13, guide §7.3/§6): every
-# spark.read.parquet() call re-reads the footer to infer the schema
-# (~0.15 s of driver-side metadata work per call), and `events` alone is
-# opened by six different queries.  Reusing the DataFrame handle per
-# (session, sf_dir, table) does that work once, exactly like a catalog
-# table.  This caches NO computed data — only the logical plan / schema;
-# every query still scans the parquet from disk.
+# Session-scoped catalog of opened tables: every spark.read.parquet() call
+# re-reads the footer to infer the schema (~0.15 s of driver-side metadata
+# work per call), and `events` alone is opened by six different queries.
+# Reusing the DataFrame handle per (session, sf_dir, table) does that work
+# once, exactly like a catalog table.  This caches NO computed data — only
+# the logical plan / schema; every query still scans the parquet from disk.
 _CATALOG: WeakKeyDictionary = WeakKeyDictionary()
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Open ``{sf_dir}/{table}.parquet``, reusing the session's handle.
+
+    Inputs are immutable within a session: the cached handle pins the file
+    listing, so a table rewritten after its first load() is not seen.
+    """
     tables = _CATALOG.setdefault(spark, {})
     key = (sf_dir, table)
     df = tables.get(key)

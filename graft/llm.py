@@ -13,23 +13,20 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup: keep the lowest doc_id per content hash and
     report how many copies it had.
 
-    Optimized (r12, guide §2.3/§2.4): originally two window functions over
-    md5(text) => 2 Exchanges + Sort, with the full `text` column flowing
-    through the first shuffle.  Rewritten as a single groupBy(md5) with
-    min_by + count: one Exchange, partial (map-side) aggregation, and only
-    the hash plus metadata cross the shuffle — the text bytes never
-    leave the scan stage.  Equivalent because doc_id is unique, so
-    min_by(struct, doc_id) picks exactly the row row_number()=1 picked.
+    One groupBy(hash) with min_by + count: one Exchange, partial (map-side)
+    aggregation, and only the hash plus metadata cross the shuffle — the
+    text bytes never leave the scan stage.  Equivalent to a row_number()
+    window per hash because doc_id is unique, so min_by(struct, doc_id)
+    picks exactly the row row_number()=1 would pick.
 
-    Optimized (r13, guide §2.3 — narrower types): group on unhex(md5) (16-byte
-    BINARY) instead of the 32-char hex STRING.  unhex is injective on md5's
-    hex output, so the grouping (and any collision behaviour) is identical;
-    the key every row carries through the map-side Sort and the Exchange is
-    half the size and cheaper to compare.  The SortAggregate itself stays:
-    min_by's struct buffer is not UnsafeRow-mutable, so Spark cannot
-    hash-aggregate it, and the join-back reshape that would permit a
-    HashAggregate trades the 2 in-memory sorts for 2 extra Exchanges of the
-    full metadata — worse at scale.
+    The key is unhex(md5) (16-byte BINARY), not the 32-char hex STRING.
+    unhex is injective on md5's hex output, so the grouping (and any
+    collision behaviour) is that of md5(text), with a key half the size
+    through the map-side Sort and the Exchange.  The aggregate is a
+    SortAggregate: min_by's struct buffer is not UnsafeRow-mutable, so
+    Spark cannot hash-aggregate it, and the join-back reshape that would
+    permit a HashAggregate trades the 2 in-memory sorts for 2 extra
+    Exchanges of the full metadata — worse at scale.
     """
     docs = load(spark, sf_dir, "documents")
     return (
@@ -53,13 +50,12 @@ def doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus statistics (docs, sources, chars, words, uniques).
 
-    Optimized (r13, guide §1.2 per-task work): the word count was
-    size(split(text, ' ')) — a regex split that allocates an array of strings
-    per row only to take its length.  Spark's split keeps trailing empty
-    strings (Pattern.split(str, -1)), so size(split(t, ' ')) == #spaces + 1
-    exactly, including empty ('' -> 1) and trailing-space ('a ' -> 2) cases;
-    length(t) - length(replace(t, ' ')) + 1 computes the same integer with
-    two plain scans and one allocation, no regex.
+    The word count is defined as size(split(text, ' ')).  Spark's split
+    keeps trailing empty strings (Pattern.split(str, -1)), so
+    size(split(t, ' ')) == #spaces + 1 exactly, including empty ('' -> 1)
+    and trailing-space ('a ' -> 2) cases; length(t) - length(replace(t, ' '))
+    + 1 computes the same integer with two plain scans and one allocation,
+    no regex and no array of strings per row.
     """
     docs = load(spark, sf_dir, "documents")
     n_words = F.length("text") - F.length(F.replace("text", F.lit(" "))) + F.lit(1)
@@ -76,35 +72,28 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search: for every vector its nearest neighbour (cosine),
     ties broken toward the larger neighbour id.
 
-    Optimized (r12, guide §4.2/§4.5/§2.5): v1 was a BroadcastNestedLoopJoin
-    cross join whose 64-dim dot product ran through interpreted
-    `aggregate(zip_with(...))` lambdas — O(n^2 * d) expression-tree
-    evaluation on a SINGLE task (the streamed side is one parquet file), plus
-    two SortAggregates.  228 s at sf0.1.  Rewritten as `mapInArrow` + one
-    NumPy GEMM per block: Spark distributes the query side, whole Arrow
-    batches go to native BLAS.  The selection semantics are identical:
-    sim = dot/(sqrt(sq_a)*sqrt(sq_b)), argmax over sims with ties broken
-    toward the larger neighbour id, self excluded; final round(sim,4) stays
-    in Spark so rounding semantics match the oracle exactly.
+    `mapInArrow` + one NumPy GEMM per block: Spark distributes the query
+    side, whole Arrow batches go to native BLAS.  The selection semantics
+    are the oracle's cross join: sim = dot/(sqrt(sq_a)*sqrt(sq_b)), argmax
+    over sims with ties broken toward the larger neighbour id, self
+    excluded; final round(sim,4) stays in Spark so rounding semantics match
+    the oracle exactly.
 
-    Optimized (r13, guide §3.2/§4.5): the index side is now read ONCE
-    through Spark's own reader (so any Hadoop filesystem works — the r12
-    version did a worker-local `pq.read_table(local_path)` per task, a
-    local-mode assumption) and shipped to executors as a Spark broadcast:
-    one copy per executor/worker instead of one read+copy per task.  The
-    index columns are pre-sorted by vec_id DESCENDING so that np.argmax
-    (first-max-wins) breaks exact-similarity ties toward the larger id with
-    no sentinel value — correct for any id range, including negatives.
-    Broadcast envelope: n×64 float64 = ~0.5 GB per million index rows; for
-    an index beyond executor memory, shard the broadcast and take a max over
+    The index side is read ONCE through Spark's own reader (so any Hadoop
+    filesystem works) and shipped to executors as a Spark broadcast: one
+    copy per executor/worker, not one read+copy per task.  The index columns
+    are pre-sorted by vec_id DESCENDING so that np.argmax (first-max-wins)
+    breaks exact-similarity ties toward the larger id with no sentinel
+    value — correct for any id range, including negatives.  Broadcast
+    envelope: n×64 float64 = ~0.5 GB per million index rows; for an index
+    beyond executor memory, shard the broadcast and take a max over
     per-shard argmax results (not needed at any tested scale).
     """
     import numpy as np
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     # Index side: one scan via Spark (any FS), collected as Arrow.  Metadata
-    # cost only at this scale; at any scale it is O(index), the same data
-    # every task previously re-read from local disk.
+    # cost only at this scale; at any scale it is O(index).
     idx = emb.toArrow()
     n_rows = idx.num_rows
     ids = idx.column("vec_id").to_numpy()
@@ -126,7 +115,7 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         mat = norms = None
     b_idx = spark.sparkContext.broadcast((ids, labs, mat, norms))
     # Each Python task carries a fixed JVM<->Python boundary cost (~0.4 s
-    # here, guide §4.1), so size the Python stage from the actual work:
+    # measured in local mode), so size the Python stage from the actual work:
     # O(n^2 * d) flops, targeting ~0.5e9 flops per task (~50 ms of BLAS),
     # capped at the core count.  This stays scale-adaptive: a 100x bigger
     # index => 10_000x the flops => task count hits the defaultParallelism
@@ -174,7 +163,7 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             q_norms = np.sqrt((x * x).sum(axis=1))
             m_rows = len(q_ids)
             # vectorized self-lookup: column of each query id in the
-            # DESC-ordered index (replaces the old per-row dict loop)
+            # DESC-ordered index
             pos = np.searchsorted(ids_asc, q_ids)
             found = (pos < n) & (ids_asc[np.minimum(pos, n - 1)] == q_ids)
             q_col = n - 1 - pos

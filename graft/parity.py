@@ -7,6 +7,7 @@ an order-insensitive multiset comparison of values.
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 
@@ -17,9 +18,19 @@ TABLES = [
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table present in ``sf_dir``.
+
+    A table is either one parquet file or a directory of part files, as
+    Spark writes it; tables absent from ``sf_dir`` get no view.
+    """
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        elif not os.path.isfile(path):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
 
 

@@ -2,7 +2,7 @@
 
 Core count comes from $SPARK_GRAFT_CPUS (driver contract: the bench is also
 run at reduced core counts to measure scaling, so the master must never be
-hard-coded).  Scale-dependent settings stay parameterised here.
+hard-coded).  Every setting not listed below is Spark's default.
 """
 
 from __future__ import annotations
@@ -15,37 +15,21 @@ from pyspark.sql import SparkSession
 def build_session(app: str = "spark-graft", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+    # Driver heap: half of physical RAM.  In local mode the driver JVM runs
+    # every task, so it takes the largest share; the other half is left for
+    # the JVM's off-heap memory, the Python workers (each holds a copy of
+    # vector_knn's index) and the page cache serving the parquet reads.
+    phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", f"{phys_mib // 2}m")
         .config("spark.ui.enabled", "false")
-        # --- r12 optimization round (guide §2.2/§9). Scale-dependent knobs
-        # are env-parameterised; defaults are scale-adaptive (AQE derives
-        # post-shuffle partition counts from data size), not tuned to this
-        # box. Production notes in OPTIMIZATION_r12.md.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-        )
-        .config(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "200"),
-        )
-        # allow shuffled-hash when a build side fits (guide §3.1); all current
-        # joins resolve to broadcast anyway, this is the safe fallback order
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # Arrow for the Python boundary (vector_knn mapInArrow) and any
-        # toPandas debugging (guide §4/§6)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # One BLAS thread per Python worker: Spark tasks are the parallelism
         # unit; an unpinned OpenBLAS spawns cores() threads per worker and
         # spin-waits, which measured 2-5x slower on the thin-K GEMMs used by
-        # vector_knn (guide §4.2 — native code inside the UDF, but sized to
-        # the task)
+        # vector_knn
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

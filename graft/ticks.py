@@ -88,16 +88,15 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (streaming session_window batch analog): per user,
     number of sessions split at >30 min inactivity gaps.
 
-    Optimized (r13, guide §2.3 — shuffle fewer bytes): the lag window used to
-    shuffle and sort [event_id, ts, user_id, value, unix_micros(ts)] (40 B/row)
-    ordered by (ts, event_id).  Now only [user_id, us, value] (24 B/row) cross
-    the one Exchange and the sort key is (user_id, us).  Equivalent because:
-    (a) n_events / total_value are order-independent; (b) us = unix_micros(ts)
-    is a bijection (TIMESTAMP_NTZ has exactly µs precision), so ordering by us
-    equals ordering by ts, with equal-ts rows ordered arbitrarily instead of
-    by event_id; and (c) the VALUE sequence of a sorted multiset is invariant
-    under tie ordering, so lag-gap counts per user — and hence
-    n_sessions = Σ new_session — are identical.
+    Only [user_id, us, value] (24 B/row) cross the one Exchange, and the
+    window orders by us alone, with no event_id tie-break.  The result
+    equals that of a window ordered by (ts, event_id) because:
+    (a) n_events / total_value are order-independent; (b) us =
+    unix_micros(ts) is a bijection (TIMESTAMP_NTZ has exactly µs
+    precision), so ordering by us equals ordering by ts, with equal-ts rows
+    ordered arbitrarily instead of by event_id; and (c) the VALUE sequence
+    of a sorted multiset is invariant under tie ordering, so lag-gap counts
+    per user — and hence n_sessions = Σ new_session — are identical.
     """
     ev = load(spark, sf_dir, "events")
     # parquet ts is TIMESTAMP_NTZ; cast to TIMESTAMP (session TZ pinned to UTC)
@@ -131,11 +130,11 @@ def top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             dec_sum("value", "spend"),
         )
     )
-    # Optimized (r12, guide §2.4): a row_number window over ALL users needs a
-    # single-partition sort of the whole aggregate; orderBy().limit(10)
-    # compiles to TakeOrderedAndProject (per-partition top-k, driver merge,
-    # no global shuffle).  The rank window then runs over just 10 rows.
-    # Identical output: both use the total order (spend DESC, user_id).
+    # A row_number window over ALL users would need a single-partition sort
+    # of the whole aggregate; orderBy().limit(10) compiles to
+    # TakeOrderedAndProject (per-partition top-k, driver merge, no global
+    # shuffle), and the rank window then runs over just 10 rows.  Identical
+    # output: both use the total order (spend DESC, user_id).
     top = spend.orderBy(F.col("spend").desc(), "user_id").limit(10)
     w = Window.orderBy(F.col("spend").desc(), F.col("user_id"))
     # row_number is INT in Spark but BIGINT in DuckDB; cast for schema parity

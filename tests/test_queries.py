@@ -21,19 +21,27 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
+def assert_oracle_parity(spark, name, sf_dir):
+    con = duck_con(sf_dir)
+    problems = check(spark, con, QUERIES[name], sf_dir, ORACLE_SQL[name])
+    assert problems == [], problems
+
+
+def test_driver_heap_within_physical_ram(spark):
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert 0 < heap <= phys, (heap, phys)
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_oracle_parity_sf0001(spark, name):
-    con = duck_con(SF0001)
-    problems = check(spark, con, QUERIES[name], SF0001, ORACLE_SQL[name])
-    assert problems == [], problems
+    assert_oracle_parity(spark, name, SF0001)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
 def test_oracle_parity_sf001(spark, name):
     """Parity at sf0.01 — the scale factor the driver checks."""
-    con = duck_con(SF001)
-    problems = check(spark, con, QUERIES[name], SF001, ORACLE_SQL[name])
-    assert problems == [], problems
+    assert_oracle_parity(spark, name, SF001)
 
 
 def test_sessionization_gap_logic(spark, tmp_path):
@@ -57,6 +65,7 @@ def test_sessionization_gap_logic(spark, tmp_path):
     assert out[7]["n_events"] == 5
     assert out[7]["n_sessions"] == 2
     assert out[8]["n_sessions"] == 1
+    assert_oracle_parity(spark, "user_sessions", d)
 
 
 def test_user_sessions_order_invariant(spark, tmp_path):
@@ -82,6 +91,7 @@ def test_user_sessions_order_invariant(spark, tmp_path):
         ).parquet(f"{d}/events.parquet")
         out = QUERIES["user_sessions"](spark, d).collect()[0]
         results.append((out["n_events"], out["n_sessions"], out["total_value"]))
+        assert_oracle_parity(spark, "user_sessions", d)
     assert results[0] == (5, 3, 5.0)
     assert results[0] == results[1] == results[2]
 
@@ -110,6 +120,7 @@ def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
     assert out[4]["sim"] == 0.0
     for vid, r in out.items():
         assert r["nn_id"] != vid         # self excluded
+    assert_oracle_parity(spark, "vector_knn", d)
 
 
 def test_doc_stats_word_count_edge_cases(spark, tmp_path):
@@ -131,6 +142,7 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
     out = {r["lang"]: r for r in QUERIES["doc_stats"](spark, d).collect()}
     assert out["en"]["total_words"] == 1 + 2 + 3 + 2
     assert out["de"]["total_words"] == 3
+    assert_oracle_parity(spark, "doc_stats", d)
 
 
 def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
@@ -150,6 +162,7 @@ def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
     assert out[3]["n_copies"] == 2
     assert out[3]["source"] == "s2"      # metadata travels with the survivor row
     assert out[7]["n_copies"] == 1
+    assert_oracle_parity(spark, "doc_dedup", d)
 
 
 def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
@@ -176,6 +189,7 @@ def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
     assert out[5]["nn_id"] == -1         # sim 0 everywhere -> largest id
     for vid, r in out.items():
         assert r["nn_id"] != vid         # self excluded
+    assert_oracle_parity(spark, "vector_knn", d)
 
 
 def test_vector_knn_degenerate_index_empty(spark, tmp_path):

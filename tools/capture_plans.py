@@ -1,12 +1,17 @@
 #!/usr/bin/env python3
 """Dump .explain('formatted') for every declared query to plans/<round>/.
 
+Expression ids (``#123``) depend on how many expressions the session built
+before, so they are replaced by ``#``: a before/after diff then shows only
+operator and expression changes.
+
 Usage: python tools/capture_plans.py <suffix: before|after> [sf_dir] [out_dir]
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -30,7 +35,7 @@ def main() -> None:
         )
         path = f"{out_dir}/{name}_{suffix}.txt"
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(re.sub(r"#\d+", "#", plan))
         print(f"wrote {path}")
     spark.stop()
 
