@@ -72,131 +72,96 @@ def vector_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search: for every vector its nearest neighbour (cosine),
     ties broken toward the larger neighbour id.
 
-    `mapInArrow` + one NumPy GEMM per block: Spark distributes the query
-    side, whole Arrow batches go to native BLAS.  The selection semantics
-    are the oracle's cross join: sim = dot/(sqrt(sq_a)*sqrt(sq_b)), argmax
-    over sims with ties broken toward the larger neighbour id, self
-    excluded; final round(sim,4) stays in Spark so rounding semantics match
-    the oracle exactly.
+    One Python task (`coalesce(1)` + `mapInArrow`) gets every Arrow batch of
+    the table, builds the index in the worker and answers all queries with
+    one NumPy GEMM per row block; the task holds the whole index (n×d
+    float64, ~0.5 GB per million 64-d rows).  The semantics are the
+    oracle's cross join: sim = dot/(sqrt(sq_a)*sqrt(sq_b)), argmax over
+    sims, self excluded; final round(sim,4) stays in Spark so rounding
+    matches the oracle exactly.  Rows are sorted by vec_id DESCENDING so
+    that np.argmax (first max wins) breaks exact ties toward the larger id
+    with no sentinel value, for any id range including negatives.
 
-    The index side is read ONCE through Spark's own reader (so any Hadoop
-    filesystem works) and shipped to executors as a Spark broadcast: one
-    copy per executor/worker, not one read+copy per task.  The index columns
-    are pre-sorted by vec_id DESCENDING so that np.argmax (first-max-wins)
-    breaks exact-similarity ties toward the larger id with no sentinel
-    value — correct for any id range, including negatives.  Broadcast
-    envelope: n×64 float64 = ~0.5 GB per million index rows; for an index
-    beyond executor memory, shard the broadcast and take a max over
-    per-shard argmax results (not needed at any tested scale).
+    Input contract: vec_id is unique, and embeddings are non-null lists of
+    one length with no null element and non-zero norm; a violation raises
+    ValueError.  The oracle returns one row per distinct id and never pairs
+    copies of one id, gives a zero vector -1.0 where NumPy gives NaN, and
+    rejects null or ragged lists itself.
     """
-    import numpy as np
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    # Index side: one scan via Spark (any FS), collected as Arrow.  Metadata
-    # cost only at this scale; at any scale it is O(index).
-    idx = emb.toArrow()
-    n_rows = idx.num_rows
-    ids = idx.column("vec_id").to_numpy()
-    labs = idx.column("label").to_numpy()
-    if n_rows >= 2:
-        # .flatten() (not .values) honours list-array offsets/null bitmaps
-        mat = (
-            idx.column("embedding")
-            .combine_chunks()
-            .flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64)
-            .reshape(n_rows, -1)
-        )
-        order = np.argsort(ids)[::-1]  # vec_id DESC: argmax tie => larger id
-        ids, labs, mat = ids[order], labs[order], mat[order]
-        norms = np.sqrt((mat * mat).sum(axis=1))
-    else:  # degenerate index: workers emit nothing (see guard below)
-        mat = norms = None
-    b_idx = spark.sparkContext.broadcast((ids, labs, mat, norms))
-    # Each Python task carries a fixed JVM<->Python boundary cost (~0.4 s
-    # measured in local mode), so size the Python stage from the actual work:
-    # O(n^2 * d) flops, targeting ~0.5e9 flops per task (~50 ms of BLAS),
-    # capped at the core count.  This stays scale-adaptive: a 100x bigger
-    # index => 10_000x the flops => task count hits the defaultParallelism
-    # cap long before local overheads matter.
-    est_flops = n_rows * n_rows * 64 * 2
-    n_parts = int(min(spark.sparkContext.defaultParallelism,
-                      max(1, est_flops // 500_000_000)))
 
-    def nn_batches(batches):
+    def nn_all(batches):
         import numpy as np
         import pyarrow as pa
 
-        # index side: one broadcast copy per worker, amortised over tasks
-        ids, labs, mat, norms = b_idx.value
-        n = len(ids)
+        batches = list(batches)  # the one task gets the whole table
+        n = sum(b.num_rows for b in batches)
         if n < 2:
-            # degenerate index: no pair (a, b), a != b exists, so the
-            # nearest-neighbour relation is empty (matches the oracle's
-            # self-excluding join)
+            # no pair (a, b), a != b exists, so the nearest-neighbour
+            # relation is empty (matches the oracle's self-excluding join)
             return
-        ids_asc = ids[::-1]  # ids is sorted DESC; searchsorted wants ASC
+        tbl = pa.Table.from_batches(batches)
+        ids = tbl.column("vec_id").to_numpy()
+        order = np.argsort(ids)[::-1]  # vec_id DESC: argmax tie => larger id
+        ids = ids[order]
+        dup = np.flatnonzero(ids[1:] == ids[:-1])
+        if dup.size:
+            raise ValueError(f"vector_knn: duplicate vec_id {ids[dup[0]]}")
+        labs = tbl.column("label").combine_chunks().take(order)  # Arrow keeps NULLs
+        emb = tbl.column("embedding").combine_chunks()
+        # .flatten() (not .values) honours list-array offsets/null bitmaps
+        flat = emb.flatten()
+        if emb.null_count or flat.null_count or np.unique(emb.value_lengths()).size > 1:
+            raise ValueError(
+                "vector_knn: embeddings must be non-null lists of one length"
+                " without null elements"
+            )
+        mat = (
+            flat.to_numpy(zero_copy_only=False)
+            .astype(np.float64)
+            .reshape(n, len(flat) // n)[order]
+        )
+        norms = np.sqrt((mat * mat).sum(axis=1))
+        zero = np.flatnonzero(norms == 0)
+        if zero.size:
+            raise ValueError(f"vector_knn: zero-norm embedding at vec_id {ids[zero[0]]}")
 
         mat_t = mat.T  # dgemm handles the transposed view directly
         # Process queries in row blocks with preallocated, reused buffers:
-        # a full n x n sims matrix means ~100 MB of FIRST-TOUCH pages per
-        # task, and on this kernel faulting fresh pages stalls ~1-3 s (measured:
-        # fresh-alloc GEMM 1.7 s vs 0.07 s with reused buffers).  Blocking
-        # keeps the working set a few MB and amortises it across blocks.
+        # a full n x n sims matrix means ~100 MB of first-touch pages, and
+        # faulting fresh pages was measured to stall the GEMM (fresh-alloc
+        # 1.7 s vs 0.07 s with reused buffers).  Blocking keeps the working
+        # set a few MB and amortises it across blocks.
         blk = int(max(16, min(1024, (4 << 20) // (8 * n))))
         sims = np.empty((blk, n))
         den = np.empty((blk, n))
+        nn = np.empty(n, dtype=np.int64)
+        best = np.empty(n)
+        for s in range(0, n, blk):
+            e = min(s + blk, n)
+            b = e - s
+            rows = np.arange(b)
+            # sim = dot / (norm_a * norm_b), same op order as the oracle
+            np.matmul(mat[s:e], mat_t, out=sims[:b])
+            np.multiply(norms[s:e, None], norms[None, :], out=den[:b])
+            np.divide(sims[:b], den[:b], out=sims[:b])
+            sims[rows, np.arange(s, e)] = -np.inf  # self: queries are the index rows
+            # columns are id-DESC, so the first max is the largest id
+            nn[s:e] = np.argmax(sims[:b], axis=1)
+            best[s:e] = sims[rows, nn[s:e]]
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids, type=pa.int64()),
+                labs,
+                pa.array(ids[nn], type=pa.int64()),
+                labs.take(nn),
+                pa.array(best, type=pa.float64()),
+            ],
+            names=["vec_id", "label", "nn_id", "nn_label", "sim"],
+        )
 
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            q_ids = batch.column("vec_id").to_numpy()
-            q_labs = batch.column("label").to_numpy()
-            x = (
-                batch.column("embedding")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(len(q_ids), -1)
-            )
-            q_norms = np.sqrt((x * x).sum(axis=1))
-            m_rows = len(q_ids)
-            # vectorized self-lookup: column of each query id in the
-            # DESC-ordered index
-            pos = np.searchsorted(ids_asc, q_ids)
-            found = (pos < n) & (ids_asc[np.minimum(pos, n - 1)] == q_ids)
-            q_col = n - 1 - pos
-            out_pos = np.empty(m_rows, dtype=np.int64)
-            out_best = np.empty(m_rows)
-            for s in range(0, m_rows, blk):
-                e = min(s + blk, m_rows)
-                b = e - s
-                # sim = dot / (norm_a * norm_b), same op order as the oracle
-                np.matmul(x[s:e], mat_t, out=sims[:b])
-                np.multiply(q_norms[s:e, None], norms[None, :], out=den[:b])
-                np.divide(sims[:b], den[:b], out=sims[:b])
-                f = found[s:e]
-                sims[np.flatnonzero(f), q_col[s:e][f]] = -np.inf  # self
-                # columns are id-DESC, so the first max is the largest id
-                out_pos[s:e] = np.argmax(sims[:b], axis=1)
-                out_best[s:e] = sims[np.arange(b), out_pos[s:e]]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(q_ids, type=pa.int64()),
-                    pa.array(q_labs, type=pa.int32()),
-                    pa.array(ids[out_pos], type=pa.int64()),
-                    pa.array(labs[out_pos], type=pa.int32()),
-                    pa.array(out_best, type=pa.float64()),
-                ],
-                names=["vec_id", "label", "nn_id", "nn_label", "sim"],
-            )
-
-    # coalesce avoids a shuffle when we only need to shrink; repartition
-    # (round-robin) only when we must fan a skinny scan out to more tasks
-    shaped = emb.coalesce(1) if n_parts == 1 else emb.repartition(n_parts)
-    out = shaped.mapInArrow(
-        nn_batches,
+    out = emb.coalesce(1).mapInArrow(
+        nn_all,
         "vec_id bigint, label int, nn_id bigint, nn_label int, sim double",
     )
     return out.withColumn("sim", F.round("sim", 4))

@@ -69,9 +69,9 @@ def test_sessionization_gap_logic(spark, tmp_path):
 
 
 def test_user_sessions_order_invariant(spark, tmp_path):
-    """The r13 narrow-shuffle rewrite orders by unix_micros only (no event_id
-    tie-break); per-user aggregates must be invariant to input row order,
-    including duplicated timestamps around a gap boundary."""
+    """user_sessions orders by unix_micros only (no event_id tie-break);
+    per-user aggregates must be invariant to input row order, including
+    duplicated timestamps around a gap boundary."""
     base = [
         (1, dt.datetime(2024, 1, 1, 0, 0, 0), 7, "view", 1.0, "{}"),
         (2, dt.datetime(2024, 1, 1, 0, 0, 0), 7, "view", 1.0, "{}"),   # tie at start
@@ -96,37 +96,10 @@ def test_user_sessions_order_invariant(spark, tmp_path):
     assert results[0] == results[1] == results[2]
 
 
-def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path):
-    """Focused unit test for the r12 mapInArrow/GEMM rewrite: self is never
-    its own neighbour, and exact similarity ties go to the LARGER id."""
-    rows = [
-        (1, [1.0, 0.0], 0),
-        (2, [1.0, 0.0], 0),   # identical to 1 and 3
-        (3, [1.0, 0.0], 1),
-        (4, [0.0, 1.0], 1),   # orthogonal to the others
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    d = str(tmp_path / "knn")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    out = {r["vec_id"]: r for r in QUERIES["vector_knn"](spark, d).collect()}
-    assert len(out) == 4
-    assert out[1]["nn_id"] == 3          # tie between 2 and 3 -> larger id
-    assert out[2]["nn_id"] == 3          # tie between 1 and 3 -> larger id
-    assert out[3]["nn_id"] == 2          # tie between 1 and 2 -> larger id
-    assert out[1]["sim"] == 1.0
-    assert out[4]["nn_id"] == 3          # orthogonal: sim 0 ties -> largest id
-    assert out[4]["sim"] == 0.0
-    for vid, r in out.items():
-        assert r["nn_id"] != vid         # self excluded
-    assert_oracle_parity(spark, "vector_knn", d)
-
-
 def test_doc_stats_word_count_edge_cases(spark, tmp_path):
-    """Focused unit test for the r13 word-count rewrite: the length-diff
-    formula must equal size(split(text, ' ')) on empty strings, trailing
-    spaces, and consecutive spaces (split keeps empty fields)."""
+    """The length-diff word count must equal size(split(text, ' ')) on
+    empty strings, trailing spaces, and consecutive spaces (split keeps
+    empty fields)."""
     rows = [
         (1, "", "en", "s1", 0),            # split('') -> [''] = 1
         (2, "a ", "en", "s1", 2),          # ['a',''] = 2
@@ -146,7 +119,8 @@ def test_doc_stats_word_count_edge_cases(spark, tmp_path):
 
 
 def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
-    """Focused unit test for the r12 groupBy(min_by) rewrite of doc_dedup."""
+    """doc_dedup keeps the lowest doc_id per content, with that row's
+    metadata and the number of copies."""
     rows = [
         (10, "hello world", "en", "s1", 11),
         (3, "hello world", "en", "s2", 11),   # dup -> survivor (min id)
@@ -165,48 +139,123 @@ def test_doc_dedup_keeps_min_id_and_counts(spark, tmp_path):
     assert_oracle_parity(spark, "doc_dedup", d)
 
 
-def test_vector_knn_negative_ids_and_multifile_index(spark, tmp_path):
-    """Focused unit test for the r13 broadcast-index rewrite: tie-break must
-    hold for NEGATIVE vec_ids (the r12 `-1` sentinel would mis-pick), and the
-    index side must load correctly from a Spark-written multi-file directory
-    (the r12 version pq.read_table'd a driver-local path per task)."""
-    rows = [
-        (-3, [1.0, 0.0], 0),
-        (-2, [1.0, 0.0], 0),  # identical to -3 and -1
-        (-1, [1.0, 0.0], 1),
-        (5, [0.0, 1.0], 1),   # orthogonal to the others
-    ]
-    df = spark.createDataFrame(
+def write_embeddings(spark, d, rows, n_files=1):
+    spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
-    )
-    d = str(tmp_path / "knn_neg")
-    df.repartition(3).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    out = {r["vec_id"]: r for r in QUERIES["vector_knn"](spark, d).collect()}
-    assert len(out) == 4
-    assert out[-3]["nn_id"] == -1        # tie between -2 and -1 -> larger id
-    assert out[-2]["nn_id"] == -1        # tie between -3 and -1 -> larger id
-    assert out[-1]["nn_id"] == -2        # tie between -3 and -2 -> larger id
-    assert out[5]["nn_id"] == -1         # sim 0 everywhere -> largest id
-    for vid, r in out.items():
-        assert r["nn_id"] != vid         # self excluded
+    ).repartition(n_files).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+
+
+@pytest.mark.parametrize(
+    "rows, n_files, expect",
+    [
+        pytest.param(
+            [
+                (1, [1.0, 0.0], 0),
+                (2, [1.0, 0.0], 0),   # identical to 1 and 3
+                (3, [1.0, 0.0], 1),
+                (4, [0.0, 1.0], 1),   # orthogonal to the others
+            ],
+            1,
+            # ties among 1, 2, 3 -> larger id; 4 is orthogonal: sim 0
+            # everywhere -> largest id
+            {1: (3, 1.0), 2: (3, 1.0), 3: (2, 1.0), 4: (3, 0.0)},
+            id="positive_ids",
+        ),
+        pytest.param(
+            [
+                (-3, [1.0, 0.0], 0),
+                (-2, [1.0, 0.0], 0),  # identical to -3 and -1
+                (-1, [1.0, 0.0], 1),
+                (5, [0.0, 1.0], 1),   # orthogonal to the others
+            ],
+            3,
+            {-3: (-1, 1.0), -2: (-1, 1.0), -1: (-2, 1.0), 5: (-1, 0.0)},
+            id="negative_ids_multifile",
+        ),
+        pytest.param(
+            [
+                (1, [1.0, 0.0], None),  # a NULL label passes through
+                (2, [1.0, 1.0], 0),
+                (3, [0.0, 1.0], 1),
+            ],
+            1,
+            {1: (2, 0.7071), 2: (3, 0.7071), 3: (2, 0.7071)},
+            id="null_label",
+        ),
+        # no (a, b), a != b pair exists: the result is empty
+        pytest.param([(1, [1.0, 0.0], 0)], 1, {}, id="single_row"),
+    ],
+)
+def test_vector_knn_tiebreak_and_self_exclusion(spark, tmp_path, rows, n_files, expect):
+    """Self is never its own neighbour and exact similarity ties go to the
+    LARGER id, for negative ids too (a sentinel-based tie-break would
+    mis-pick them) and for a table written as several files."""
+    d = str(tmp_path / "knn")
+    write_embeddings(spark, d, rows, n_files)
+    got = QUERIES["vector_knn"](spark, d).collect()
+    assert len(got) == len(expect)
+    assert {r["vec_id"]: (r["nn_id"], r["sim"]) for r in got} == expect
+    for r in got:
+        assert r["nn_id"] != r["vec_id"]   # self excluded
     assert_oracle_parity(spark, "vector_knn", d)
 
 
-def test_vector_knn_degenerate_index_empty(spark, tmp_path):
-    """A single-vector index has no (a, b), a != b pair: the result is empty,
-    matching the oracle's self-excluding join semantics."""
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], 0)], "vec_id long, embedding array<float>, label int"
-    )
-    d = str(tmp_path / "knn_one")
-    df.coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    assert QUERIES["vector_knn"](spark, d).count() == 0
+@pytest.mark.parametrize(
+    "rows, cause",
+    [
+        pytest.param(
+            [(1, [1.0, 0.0], 0), (1, [0.0, 1.0], 1), (2, [1.0, 1.0], 0),
+             (3, [1.0, 2.0], 1)],
+            "duplicate vec_id 1",
+            id="duplicate_id",
+        ),
+        pytest.param(
+            [(1, [0.0, 0.0], 0), (2, [1.0, 0.0], 0), (3, [0.0, 1.0], 1)],
+            "zero-norm embedding at vec_id 1",
+            id="zero_norm",
+        ),
+        pytest.param(
+            [(1, [1.0, 0.0, 0.0], 0), (2, [1.0], 0)],  # 4 values reshape to 2x2
+            "non-null lists of one length",
+            id="ragged",
+        ),
+        pytest.param(
+            [(1, [1.0, 0.0], 0), (2, None, 0), (3, [0.0, 1.0], 1)],
+            "non-null lists of one length",
+            id="null_embedding",
+        ),
+        pytest.param(
+            [(1, [1.0, None], 0), (2, [1.0, 0.0], 0), (3, [0.0, 1.0], 1)],
+            "non-null lists of one length",
+            id="null_element",
+        ),
+    ],
+)
+def test_vector_knn_rejects_out_of_contract_input(spark, tmp_path, rows, cause):
+    """Inputs the oracle answers differently, or rejects, raise a ValueError
+    naming the cause instead of returning a silently different result."""
+    d = str(tmp_path / "knn_bad")
+    write_embeddings(spark, d, rows)
+    with pytest.raises(Exception, match=cause):
+        QUERIES["vector_knn"](spark, d).collect()
+
+
+def test_vector_knn_construction_starts_no_job(spark):
+    """Building the vector_knn DataFrame is lazy: once load() has opened
+    the table, constructing the query runs no Spark job."""
+    from graft.core import load
+
+    load(spark, SF001, "embeddings")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    QUERIES["vector_knn"](spark, SF001)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
 def test_load_catalog_reuses_handle_per_table(spark, tmp_path):
-    """Focused unit test for the r13 session-scoped catalog: load() returns
-    the SAME DataFrame handle for repeated (session, sf_dir, table) lookups
-    (schema inference once) and distinct handles for distinct dirs."""
+    """load() returns the SAME DataFrame handle for repeated (session,
+    sf_dir, table) lookups (schema inference once) and distinct handles for
+    distinct dirs."""
     from graft.core import load
 
     for sub in ("a", "b"):

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Dump .explain('formatted') for every declared query to plans/<round>/.
 
-Expression ids (``#123``) depend on how many expressions the session built
-before, so they are replaced by ``#``: a before/after diff then shows only
-operator and expression changes.
+Expression ids (``#123``) and exchange plan ids (``plan_id=45``) depend on
+how many expressions and plans the session built before, so their numbers
+are dropped: a before/after diff then shows only operator and expression
+changes.
 
 Usage: python tools/capture_plans.py <suffix: before|after> [sf_dir] [out_dir]
 """
@@ -35,7 +36,7 @@ def main() -> None:
         )
         path = f"{out_dir}/{name}_{suffix}.txt"
         with open(path, "w") as f:
-            f.write(re.sub(r"#\d+", "#", plan))
+            f.write(re.sub(r"(#|plan_id=)\d+", r"\1", plan))
         print(f"wrote {path}")
     spark.stop()
 
